@@ -31,10 +31,14 @@ object Bench {
     // suspicious per-query timing by focused rerun without a full sweep
     val only: Set[String] = args.drop(1).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Conf posture: requiredConfs + shuffle.partitions=cpus ONLY — i.e.
-    // Spark defaults for AQE and broadcast. An r10 experiment ran the
-    // bench under GraftSession.tuningConfs (64 MB broadcast threshold +
-    // size-first AQE coalescing) and the sf1 full sweep regressed 846 →
+    // Conf posture: requiredConfs (the correctness confs plus the two
+    // codegen-reuse confs: a 2,000-entry generated-class cache and no
+    // per-session artifact classloader, so a plan shape repeated across
+    // queries, warm-up and timed pass compiles once per JVM) +
+    // shuffle.partitions=cpus ONLY — i.e. Spark defaults for AQE and
+    // broadcast. An r10 experiment ran the bench under
+    // GraftSession.tuningConfs (64 MB broadcast threshold + size-first
+    // AQE coalescing) and the sf1 full sweep regressed 846 →
     // 1207 s: the broadcast threshold flips the token-df joins of the
     // bm25/tfidf family to building ~50 MB broadcast maps per probe
     // (bm25_retrieval 17 → 48 s with NO code change), and size-first

@@ -10,8 +10,9 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same conf posture as graft.Bench: requiredConfs + partitions=cpus,
-    // engine defaults otherwise (see the Bench builder comment)
+    // same conf posture as graft.Bench: requiredConfs (correctness plus
+    // codegen-reuse confs) + partitions=cpus, engine defaults otherwise
+    // (see the Bench builder comment)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -891,24 +891,6 @@ class GraftEngine(val spark: SparkSession, val root: String) {
     * files). The mirror is for GROWING dirs: many appends × many probes. */
   private val LogMirrorMinFiles = 12
 
-  /** Leaf data files of a log dir with sizes (hidden/metadata skipped). */
-  private def listDataFiles(base: String): Map[String, Long] = {
-    val root = Paths.get(base)
-    if (!Files.exists(root)) Map.empty
-    else {
-      val s = Files.walk(root)
-      try {
-        val b = Map.newBuilder[String, Long]
-        s.forEach { p =>
-          val n = p.getFileName.toString
-          if (Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith("."))
-            b += (p.toString -> Files.size(p))
-        }
-        b.result()
-      } finally s.close()
-    }
-  }
-
   /** Scan of `<store>/<d>` under the explicit `expected` schema, served
     * from (and extending) the incremental mirror. Only sound for
     * typed-marked logs — every file's physical schema must embed into
@@ -923,7 +905,7 @@ class GraftEngine(val spark: SparkSession, val root: String) {
       val reads = logMirrorReads.getOrElse(key, 0) + 1
       logMirrorReads(key) = reads
       if (reads < LogMirrorMinReads) return dirScan
-      val current = listDataFiles(base)
+      val current = GraftEngine.listDataFiles(base)
       if (current.isEmpty) return emptyFrame(expected)
       if (current.size < LogMirrorMinFiles && !logMirror.contains(key))
         return dirScan
@@ -2705,6 +2687,31 @@ object GraftEngine {
   val LogMirrorMaxBytes: Long = scala.util.Try(
     sys.env.getOrElse("SPARK_GRAFT_LOG_MIRROR_MAX_MB", "8192").trim.toLong)
     .getOrElse(8192L).max(1L) * 1024L * 1024L
+
+  /** Data files of a log dir with sizes: the files a dir scan of `base`
+    * reads. A file is skipped when its name or any directory between it and
+    * `base` is hidden — `_`- or `.`-prefixed, as Spark's file index rules
+    * it, so `__bucket=3` partition dirs stay and an in-flight append's
+    * `_temporary/…/part-*` files (not yet committed, soon moved) do not. */
+  private[graft] def listDataFiles(base: String): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(base)
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    if (!Files.exists(root)) Map.empty
+    else {
+      val s = Files.walk(root)
+      try {
+        val b = Map.newBuilder[String, Long]
+        s.forEach { p =>
+          if (Files.isRegularFile(p) &&
+              !root.relativize(p).iterator().asScala.exists(c => hidden(c.toString)))
+            b += (p.toString -> Files.size(p))
+        }
+        b.result()
+      } finally s.close()
+    }
+  }
 
   /** Driver-side twin of HashOps.partitionId (md5 of the "|"-joined key
     * rendering, first 15 hex chars mod N) — shared by the engine's point

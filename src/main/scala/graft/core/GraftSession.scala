@@ -5,8 +5,32 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the engine's standard configuration. */
 object GraftSession {
 
-  /** Confs required for correctness on the testdata (applied by every main
-    * and test suite). */
+  /** Confs applied by every session posture (`build`, `buildForTests`,
+    * Bench, Verify, ProfileJobs): the confs the testdata needs for
+    * correctness, plus two that let Spark reuse the Java classes it
+    * generates for a plan instead of compiling them again with Janino.
+    *
+    * Codegen reuse, counted with Spark's compile counter
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`) in the perfbench
+    * workloads on 4 cores:
+    *   - an ingest tick (sink append, write-compute update, compaction,
+    *     view catch-up, streaming dedup drain) asks for ~200 generated
+    *     classes and a batch pass (push, versionDiff, repush, dedup and
+    *     ANN operators) for ~140. Spark's default 100-entry LRU evicts
+    *     each of them before it is asked for again, so every tick compiled
+    *     ~210 classes and every pass ~140. With 2,000 entries a repeated
+    *     batch pass compiles 0 and compaction and agg-view refresh 0;
+    *   - Spark 4.1 keys that cache by the session's artifact classloader,
+    *     and each streaming query runs in a cloned session with a fresh
+    *     one, so every streaming dedup drain recompiled its whole plan
+    *     (112 classes a drain). graft adds no session artifacts, so
+    *     artifact isolation buys nothing; with it off a drain of an
+    *     already-seen plan compiles 2 (the classes that inline its batch
+    *     id), and a steady ingest tick 4 in all.
+    *
+    * Both must be set before the first session starts: Spark reads the
+    * cache size once per JVM, when it first generates code, and isolation
+    * when it creates a session. */
   val requiredConfs: Seq[(String, String)] = Seq(
     // DSv2 surface: serve graft-format relations via the analysis-time
     // rewrite + bucket-pruning optimizer rule (sources/GraftExtensions)
@@ -16,7 +40,12 @@ object GraftSession {
     // CrdtMerge/WriteCompute rely on LAST_WIN map dedup (sorted entries ⇒
     // max-ts entry per element survives)
     "spark.sql.mapKeyDedupPolicy" -> "LAST_WIN",
-    "spark.sql.session.timeZone" -> "UTC")
+    "spark.sql.session.timeZone" -> "UTC",
+    // codegen reuse (see above): a whole perfbench run compiles 195–254
+    // distinct classes, so 2,000 holds one workload's working set many
+    // times over
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Perf posture for local[N]; on a real cluster these come from submit conf.
     *

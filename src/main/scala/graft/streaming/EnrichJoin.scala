@@ -26,15 +26,15 @@ import graft.core.GraftEngine
   */
 object EnrichJoin {
 
-  /** Threshold (bytes, from the batch plan's own size estimate — no extra
-    * job) below which a microbatch enriches through the batchGet broadcast
-    * path. Bigger batches would push a data-sized distinct-key set AND the
-    * hit set through the driver per microbatch — the r9 decade record's
-    * 5.9× super-linear cost — so they join the serving view directly
-    * instead. Env-parameterised for cluster memory postures; the default
-    * keeps the per-query bench fixtures (≤ a few MB per batch) on the
-    * broadcast path. */
-  private val broadcastBatchBytes: Long = scala.util.Try(
+  /** Default threshold (bytes, from the batch plan's own size estimate —
+    * no extra job) at or below which a microbatch enriches through the
+    * batchGet broadcast path. Bigger batches would push a data-sized
+    * distinct-key set AND the hit set through the driver per microbatch —
+    * the r9 decade record's 5.9× super-linear cost — so they join the
+    * serving view directly instead. Env-parameterised for cluster memory
+    * postures; the default keeps the per-query bench fixtures (≤ a few MB
+    * per batch) on the broadcast path. */
+  private val defaultBroadcastBatchBytes: Long = scala.util.Try(
     sys.env.getOrElse("SPARK_GRAFT_ENRICH_BROADCAST_MB", "32").trim.toLong)
     .getOrElse(32L).max(1L) * 1024L * 1024L
 
@@ -48,9 +48,11 @@ object EnrichJoin {
     * scan, hits broadcast back — the store is never shuffled); a batch so
     * large its key set is itself data-sized left-joins the CURRENT serving
     * view directly — identical result (rows outside the batch's key set
-    * never match a left join), one shuffle join, zero driver collects. */
+    * never match a left join), one shuffle join, zero driver collects.
+    * `broadcastBatchBytes` is the size estimate that splits the two. */
   def enrich(engine: GraftEngine, store: String, batch: DataFrame,
-      keyMap: Seq[(String, String)]): DataFrame = {
+      keyMap: Seq[(String, String)],
+      broadcastBatchBytes: Long = defaultBroadcastBatchBytes): DataFrame = {
     val meta = engine.storeMeta(store)
     require(keyMap.map(_._2).toSet == meta.keyCols.toSet,
       s"keyMap must cover the store key columns ${meta.keyCols.mkString(",")}")

@@ -1283,4 +1283,30 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(ex2.getMessage.contains("does not exist"))
   }
+
+  test("log mirror listing: an in-flight append's _temporary files are " +
+      "not data; partition dirs are") {
+    // the layout a Hadoop committer leaves mid-append, beside committed
+    // files of a plain log and of a bucket-partitioned (A/A) log
+    val base = graft.core.TmpStores.dir("graft-listing")
+    def touch(rel: String): String = {
+      val p = base.resolve(rel)
+      Files.createDirectories(p.getParent)
+      Files.write(p, Array[Byte](1, 2, 3))
+      p.toString
+    }
+    val committed = Set(
+      touch("part-00000-a.snappy.parquet"),
+      touch("__bucket=3/part-00001-b.snappy.parquet"))
+    Seq("_temporary/0/_temporary/attempt_1/part-00002-c.snappy.parquet",
+      "_temporary/0/task_1/part-00003-d.snappy.parquet",
+      "__bucket=3/_temporary/0/part-00004-e.snappy.parquet",
+      ".staging/part-00005-f.snappy.parquet",
+      "_SUCCESS", "_TYPED", ".part-00000-a.snappy.parquet.crc",
+      "__bucket=3/.part-00001-b.snappy.parquet.crc").foreach(touch)
+    val listed = GraftEngine.listDataFiles(base.toString)
+    assert(listed.keySet == committed)
+    assert(listed.values.forall(_ == 3L))
+    assert(GraftEngine.listDataFiles(base.resolve("absent").toString).isEmpty)
+  }
 }

@@ -336,6 +336,50 @@ class StreamingSpec extends AnyFunSuite {
       s"got $rows")
   }
 
+  test("enrichment join: the broadcast batchGet arm and the serving-view " +
+      "join arm enrich the same microbatch identically") {
+    import spark.implicits._
+    import graft.streaming.EnrichJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, ResolvedHint}
+    val e = new GraftEngine(spark,
+      graft.core.TmpStores.dir("graft-enrich-arms").toString)
+    e.createStore("dim2", Seq("a", "b"))
+    e.push("dim2", (1L to 40L).map(i => (i, s"b$i", s"v$i", i * 10))
+      .toDF("a", "b", "v", "n"), numBuckets = 4)
+    // RT overlay: an overwrite, a new key and a delete, seen by both arms
+    e.put("dim2", Seq((3L, "b3", "NEW3", 33L), (99L, "b99", "v99", 990L))
+      .toDF("a", "b", "v", "n"), tsMs = 1000L)
+    e.delete("dim2", Seq((5L, "b5")).toDF("a", "b"), tsMs = 1000L)
+    // hits, the overwritten key, the new key, a deleted key, misses and a
+    // repeated key; batch key columns are renamed to exercise the
+    // keyMap join (the identity keyMap is covered by the drain test)
+    val batch = Seq((100L, 1L, "b1"), (101L, 3L, "b3"), (102L, 99L, "b99"),
+      (103L, 5L, "b5"), (104L, 7L, "nope"), (105L, 1000L, "b1000"),
+      (106L, 1L, "b1")).toDF("evt", "ka", "kb")
+    val keyMap = Seq("ka" -> "a", "kb" -> "b")
+    def arm(threshold: Long) =
+      EnrichJoin.enrich(e, "dim2", batch, keyMap, broadcastBatchBytes = threshold)
+    val small = arm(Long.MaxValue)
+    val large = arm(0L)
+    // the arm shows as the enrichment join's build side: the broadcast
+    // batchGet hits, or the serving view itself
+    def broadcastBuild(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst { case j: Join =>
+        j.right.isInstanceOf[ResolvedHint] }
+    assert(broadcastBuild(small) == Some(true), "broadcast batchGet arm")
+    assert(broadcastBuild(large) == Some(false), "serving-view join arm")
+    assert(small.columns.toSeq == large.columns.toSeq)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    val expected = Seq(
+      Seq(100L, 1L, "b1", "v1", 10L), Seq(101L, 3L, "b3", "NEW3", 33L),
+      Seq(102L, 99L, "b99", "v99", 990L), Seq(103L, 5L, "b5", null, null),
+      Seq(104L, 7L, "nope", null, null), Seq(105L, 1000L, "b1000", null, null),
+      Seq(106L, 1L, "b1", "v1", 10L))
+    assert(rows(small) == expected)
+    assert(rows(large) == expected)
+  }
+
   test("enrichment join re-resolves the store per drain: RT write visible") {
     import spark.implicits._
     import graft.streaming.EnrichJoin
