@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every registered query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
   *
@@ -30,32 +28,10 @@ object Bench {
     // args after the dir select a query subset — for adjudicating a
     // suspicious per-query timing by focused rerun without a full sweep
     val only: Set[String] = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Conf posture: requiredConfs (the correctness confs plus the two
-    // codegen-reuse confs: a 2,000-entry generated-class cache and no
-    // per-session artifact classloader, so a plan shape repeated across
-    // queries, warm-up and timed pass compiles once per JVM) +
-    // shuffle.partitions=cpus ONLY — i.e. Spark defaults for AQE and
-    // broadcast. An r10 experiment ran the bench under
-    // GraftSession.tuningConfs (64 MB broadcast threshold + size-first
-    // AQE coalescing) and the sf1 full sweep regressed 846 →
-    // 1207 s: the broadcast threshold flips the token-df joins of the
-    // bm25/tfidf family to building ~50 MB broadcast maps per probe
-    // (bm25_retrieval 17 → 48 s with NO code change), and size-first
-    // coalescing starves explode-heavy candidate joins whose inputs are
-    // small in bytes but quadratic in downstream row work. Keeping the
-    // bench on engine defaults also keeps rounds comparable.
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // aggressive periodic GC → ContextCleaner drops dead shuffle files
-      // promptly; a 226-query sweep otherwise carries hours of dead spill
-      .config("spark.cleaner.periodicGC.interval", "5min")
-    graft.core.GraftSession.requiredConfs
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // GraftSession's one posture: Spark's default 10 MB broadcast
+    // threshold, since 64 MB flips the bm25/tfidf token-df joins to
+    // ~50 MB broadcast maps per probe (r10 sf1 sweep 846 → 1,207 s)
+    val spark = graft.core.GraftSession.build(appName = "bench")
 
     val queries0 = Queries.all
     val queries = if (only.isEmpty) queries0 else queries0.filter(q => only(q.name))

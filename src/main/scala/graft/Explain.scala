@@ -21,7 +21,7 @@ object Explain {
         "q9_profit", "q21_waiting_supplier", "dedup_ngram_capped",
         "dedup_simhash64", "dsv2_store_read", "b19_join_view",
         "ann_sq8", "w16_update_cdc", "store_config", "b20_avro_union")
-    val spark = graft.core.GraftSession.build(cpus = 4, appName = "explain")
+    val spark = graft.core.GraftSession.build(appName = "explain")
     if (!executed) {
       Queries.all.filter(q => names(q.name)).foreach { q =>
         println(s"\n========== ${q.name} ==========")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Optimization-round profiler: runs named queries and prints each Spark
@@ -14,14 +13,7 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-    (graft.core.GraftSession.requiredConfs ++
-      graft.core.GraftSession.tuningConfs(cpus.toInt))
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.build(appName = "profile-jobs")
 
     val starts = mutable.Map[Int, (Long, String, Int)]() // id -> (t0, site, nTasks)
     val rows = mutable.ArrayBuffer[(Int, Double, Int, String)]()

@@ -19,17 +19,28 @@ import graft.functions.{HashOps, TextOps, VectorOps}
 final case class QueryDef(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    /** headline queries are the ones Bench times */
-    headline: Boolean = false)
+    oracle: Option[String])
 
 object Queries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
+  /** Shuffle partitions for a streaming drain: its state is small, so 8
+    * partitions instead of the session's `cpus` keep the per-batch
+    * state-store/sink commit overhead proportional to the data. Spark
+    * freezes the count into the checkpoint at first start, so every drain
+    * of one query sees the same value. */
+  private val StreamStatePartitions = "8"
+
+  private def withStreamStatePartitions[A](s: SparkSession)(body: => A): A = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", StreamStatePartitions)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   // ---------------------------------------------------------------------------
-  // Relational core (bench headliners)
+  // Relational core
   // ---------------------------------------------------------------------------
 
   /** TPC-H Q1-style pricing summary: partial aggregation map-side, one
@@ -56,8 +67,7 @@ object Queries {
             FROM lineitem
             WHERE l_shipdate <= TIMESTAMP '1998-09-02'
             GROUP BY l_returnflag, l_linestatus
-            ORDER BY l_returnflag, l_linestatus"""),
-    headline = true)
+            ORDER BY l_returnflag, l_linestatus"""))
 
   /** TPC-H Q3-style: revenue per order for a market segment. Dim side
     * (customer ⋉ segment) broadcast; single shuffle for the orders join. */
@@ -82,8 +92,7 @@ object Queries {
             WHERE c_mktsegment = 'BUILDING'
             GROUP BY l_orderkey
             ORDER BY revenue_cents DESC, l_orderkey
-            LIMIT 10"""),
-    headline = true)
+            LIMIT 10"""))
 
   // ---------------------------------------------------------------------------
   // Venice read path (SURVEY §2.1)
@@ -317,8 +326,7 @@ object Queries {
     Some("""SELECT user_id, event_id, event_type, epoch_ms(ts) AS ts_ms, value
             FROM events
             QUALIFY row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) = 1
-            ORDER BY user_id"""),
-    headline = true)
+            ORDER BY user_id"""))
 
   /** B4's audit half: per duplicated key, copies and distinct values —
     * Venice distinguishes identical vs divergent duplicates at compaction. */
@@ -352,8 +360,7 @@ object Queries {
       .orderBy(col("vec_id")),
     Some(s"""SELECT vec_id,
              round(list_dot_product(embedding::DOUBLE[], $pvecSql), 6) AS dot
-             FROM embeddings ORDER BY vec_id"""),
-    headline = true)
+             FROM embeddings ORDER BY vec_id"""))
 
   /** R5 cosineSimilarity: dot/sqrt(‖v‖²·‖p‖²), param norm constant-folded. */
   val r5Cosine = QueryDef(
@@ -2058,8 +2065,7 @@ object Queries {
       graft.operators.Dedup.jaccardVerify(cand, sh, 0.5)
         .orderBy(col("id_a"), col("id_b"))
     },
-    Some(s"$minhashPairsSql ORDER BY id_a, id_b"),
-    headline = true)
+    Some(s"$minhashPairsSql ORDER BY id_a, id_b"))
 
   /** Duplicate clusters: connected components over the verified MinHash
     * near-dup pairs (min-label propagation + pointer jumping engine-side;
@@ -2724,8 +2730,7 @@ object Queries {
               FROM (SELECT qid, id,
                   round(list_dot_product(vec, qvec) / (n * qn), 6) + 0.0 AS sim
                 FROM c, q WHERE id <> qid))
-            WHERE rank <= 10 ORDER BY qid, rank"""),
-    headline = true)
+            WHERE rank <= 10 ORDER BY qid, rank"""))
 
   /** SQ8 ANN (compression rung #1, below PQ's): candidates ranked by the
     * EXACT integer dot product of 8-bit unit-scaled codes — 4× less scan
@@ -3085,8 +3090,7 @@ object Queries {
                round((least(n_chars, 500)::DOUBLE / 500.0
                     + least(s_en::DOUBLE * 5.0 / greatest(n_tokens, 1)::DOUBLE, 1.0)
                     + n_long::DOUBLE / greatest(n_tokens, 1)::DOUBLE) / 3.0, 6) AS quality
-             FROM s ORDER BY doc_id"""),
-    headline = true)
+             FROM s ORDER BY doc_id"""))
 
   /** W8 update-record squash analog: per-key set-union of pending values
     * (sorted for determinism) + W12 exact distinct count. */
@@ -4201,14 +4205,8 @@ object Queries {
       val maxTs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
 
       def drainOnce(): Unit = {
-        // the windowed state is small (hour buckets × event types): 8 state
-        // partitions instead of the session's 32 quarters the per-batch
-        // state-store/sink commit overhead that dominates this query's
-        // fixed cost (state partitioning is frozen into the checkpoint at
-        // first start, so both drain runs see the same value)
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        // the windowed state is small (hour buckets × event types)
+        withStreamStatePartitions(s) {
           val stream = s.readStream.schema(ev.schema).parquet(s"$root/in")
           val agged = StreamWindow.windowedAgg(stream, "ts",
             delay = "1 hour", window = "1 hour", keys = Seq("event_type"),
@@ -4219,7 +4217,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_window_agg: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       // close-out run: sentinel 3h past max advances the watermark to
@@ -4291,8 +4289,7 @@ object Queries {
               AND o_orderdate >= TIMESTAMP '1996-01-01'
               AND o_orderdate < TIMESTAMP '1998-01-01'
             GROUP BY n_name
-            ORDER BY revenue_cents DESC, n_name"""),
-    headline = true)
+            ORDER BY revenue_cents DESC, n_name"""))
 
   /** Streaming trending top-k over SLIDING windows: per 2-hour window
     * sliding hourly, the 3 most frequent event types — the "what's hot
@@ -4313,9 +4310,7 @@ object Queries {
       val (root, in) = stagedTopic(dir, "graft-strend", ev)
       val maxTs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           val stream = s.readStream.schema(ev.schema).parquet(in)
           val agged = StreamWindow.windowedAgg(stream, "ts",
             delay = "1 hour", window = "2 hours", keys = Seq("event_type"),
@@ -4325,7 +4320,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_trending: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       import s.implicits._
@@ -4437,9 +4432,7 @@ object Queries {
       val (root, in) = stagedTopic(dir, "graft-sdedup", docs,
         srcTable = "documents")
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           val stream = s.readStream.schema(docs.schema).parquet(in)
           val deduped = graft.streaming.StreamDedup.exact(stream, "text")
           val q = deduped.writeStream.format("parquet")
@@ -4447,7 +4440,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_dedup: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       import s.implicits._
@@ -4497,9 +4490,7 @@ object Queries {
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")
         .write.mode("overwrite").parquet(outDir)
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           val stream = s.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "2").parquet(in)
           val q = graft.streaming.StreamDedup.nearDupPairs(
@@ -4510,7 +4501,7 @@ object Queries {
             .trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_neardup: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       val firstText = docs.orderBy(col("doc_id")).select(col("text"))
@@ -4558,9 +4549,7 @@ object Queries {
       Seq.empty[(Long, Long)].toDF("id_a", "id_b")
         .write.mode("overwrite").parquet(outDir)
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           val stream = s.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", "2").parquet(in)
           val q = graft.streaming.StreamDedup.nearDupPairsEmbedding(
@@ -4572,7 +4561,7 @@ object Queries {
             .trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_semdedup: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       val minId = emb.agg(min(col("vec_id"))).head().getLong(0)
@@ -4633,9 +4622,7 @@ object Queries {
       e.push("evaln", esh.select(col("id").as("eval_id"),
         size(col("shingles")).cast("long").as("n_eval")), numBuckets = 4)
       val outDir = s"$root/scored"
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
+      withStreamStatePartitions(s) {
         val stream = s.readStream.schema(train.schema)
           .option("maxFilesPerTrigger", "2").parquet(in)
         val q = graft.streaming.StreamDedup.contaminationOnArrival(
@@ -4647,7 +4634,7 @@ object Queries {
           .trigger(Trigger.AvailableNow()).start()
         require(q.awaitTermination(180000),
           "stream_decontam: stream did not drain within 180s")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      }
       s.read.parquet(outDir).orderBy(col("train_id"))
     },
     Some(s"""WITH sh AS (SELECT doc_id AS id, ${shinglesSql("t")} AS shingles
@@ -6927,12 +6914,8 @@ object Queries {
       val (minTs, maxTs) = (bounds.getLong(0), bounds.getLong(1))
 
       def drainOnce(): Unit = {
-        // join state is partitioned on user_id; 8 partitions keep the
-        // per-batch state-store commit overhead proportional to the data
-        // (frozen into the checkpoint at first start — both runs agree)
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        // join state is partitioned on user_id
+        withStreamStatePartitions(s) {
           val src = s.readStream.schema(ev.schema).parquet(s"$root/in")
           val views = src.filter(col("event_type") === "view")
             .select(col("user_id"), col("event_id").as("view_id"),
@@ -6952,7 +6935,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_join: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       // the late plant: a click 10 days behind the run-1 watermark
@@ -6998,9 +6981,7 @@ object Queries {
       val maxTs = ev.agg(max(unix_millis(col("ts")))).head().getLong(0)
 
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           val src = s.readStream.schema(ev.schema).parquet(s"$root/in")
           val views = src.filter(col("event_type") === "view")
             .select(col("user_id"), col("event_id").as("view_id"),
@@ -7020,7 +7001,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_join_outer: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       // close-out: one sentinel per SIDE (the watermark is the min across
@@ -9503,9 +9484,7 @@ object Queries {
       val gapMs = 6 * 3600 * 1000L
 
       def drainOnce(): Unit = {
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        withStreamStatePartitions(s) {
           import s.implicits._
           val stream = s.readStream.schema(ev.schema).parquet(s"$root/in")
             .as[Sessionize.Evt]
@@ -9515,7 +9494,7 @@ object Queries {
             .outputMode("append").trigger(Trigger.AvailableNow()).start()
           require(q.awaitTermination(180000),
             "stream_sessionize: stream did not drain within 180s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       }
       drainOnce()
       ev.select(col("user_id")).distinct()

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,19 +8,9 @@ object Verify {
     // fast iteration; the driver passes none and gets every query
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // same conf posture as graft.Bench: requiredConfs (correctness plus
-    // codegen-reuse confs) + partitions=cpus, engine defaults otherwise
-    // (see the Bench builder comment)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    graft.core.GraftSession.requiredConfs
-      .foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // same posture as graft.Bench (see there for the absent 64 MB
+    // broadcast threshold)
+    val spark = graft.core.GraftSession.build(appName = "verify")
     new java.io.File(outDir).mkdirs()
     // per-query status, machine-checkable: ok | refused (a scale guard
     // declined oversized input BY DESIGN — GuardRefusedException in the

@@ -2,13 +2,21 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration. */
+/** The one session factory: every main, the benchmark and the test suite
+  * build their Spark session here, so they all run the same plans. */
 object GraftSession {
 
-  /** Confs applied by every session posture (`build`, `buildForTests`,
-    * Bench, Verify, ProfileJobs): the confs the testdata needs for
-    * correctness, plus two that let Spark reuse the Java classes it
-    * generates for a plan instead of compiling them again with Janino.
+  /** The one posture of a `local[cpus]` session.
+    *
+    * Besides the confs the testdata needs for correctness it sets one
+    * shuffle partition per core, no UI, a 5-minute periodic GC so the
+    * ContextCleaner drops dead shuffle files in a long process (a full
+    * query sweep or the test suite) instead of carrying them to the end,
+    * and two confs that let Spark reuse the Java classes it generates for
+    * a plan instead of compiling them again with Janino. AQE and the
+    * broadcast threshold stay at Spark's defaults: a 64 MB threshold
+    * regressed the r10 sf1 sweep 846 → 1,207 s (the bm25/tfidf token-df
+    * joins built ~50 MB broadcast maps per probe).
     *
     * Codegen reuse, counted with Spark's compile counter
     * (`CodegenMetrics.METRIC_COMPILATION_TIME`) in the perfbench
@@ -31,7 +39,7 @@ object GraftSession {
     * Both must be set before the first session starts: Spark reads the
     * cache size once per JVM, when it first generates code, and isolation
     * when it creates a session. */
-  val requiredConfs: Seq[(String, String)] = Seq(
+  def confs(cpus: Int): Seq[(String, String)] = Seq(
     // DSv2 surface: serve graft-format relations via the analysis-time
     // rewrite + bucket-pruning optimizer rule (sources/GraftExtensions)
     "spark.sql.extensions" -> "graft.sources.GraftExtensions",
@@ -45,72 +53,21 @@ object GraftSession {
     // distinct classes, so 2,000 holds one workload's working set many
     // times over
     "spark.sql.codegen.cache.maxEntries" -> "2000",
-    "spark.sql.artifact.isolation.enabled" -> "false")
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.shuffle.partitions" -> cpus.toString,
+    "spark.ui.enabled" -> "false",
+    "spark.cleaner.periodicGC.interval" -> "5min")
 
-  /** Perf posture for local[N]; on a real cluster these come from submit conf.
-    *
-    * AQE coalescing is switched from parallelism-first to SIZE-first
-    * (guide §2.2): with the default `parallelismFirst=true` AQE never
-    * coalesces below the session's default parallelism, so a 100-row
-    * shuffle still schedules `cpus` tasks — pure scheduler overhead on
-    * small inputs and tiny shuffle blocks at scale. Size-first coalescing
-    * targets `advisoryPartitionSizeInBytes` instead: small shuffles
-    * collapse to one task, big shuffles keep size-bounded partitions.
-    * The advisory size is scale-parameterised via SPARK_GRAFT_ADVISORY_MB
-    * (default 8 MB: a shuffle needs 8 MB × cpus ≈ 256 MB before it fans
-    * out to every core — sf10 shuffles do, per-query fixtures don't; on a
-    * production cluster raise it to the guide's 64-256 MB band with
-    * executor counts to match). */
-  def tuningConfs(cpus: Int): Seq[(String, String)] = {
-    // DEFAULTS = Spark's own (parallelism-first, 64 MB advisory). A
-    // size-first/8 MB posture measured faster on narrow subsets (q21-style
-    // multi-joins, tiny fixtures) but regressed the explode-heavy family
-    // hard at sf1 — candidate joins whose inputs are small in BYTES but
-    // explode into quadratic row work downstream collapsed onto 1-4
-    // post-shuffle partitions (full sweep: 846 → 1207 s; bm25_index_probe
-    // 31 → 90 s, dedup_ngram_jaccard 18 → 72 s). Bytes are the wrong
-    // proxy for row work on those stages, so the safe default is
-    // parallelism-first; both knobs stay env-tunable for cluster runs.
-    // parse defensively: a malformed env value (e.g. "64m", "True ") must
-    // not fail session build with an opaque error — fall back to defaults
-    // and normalize the boolean to exactly "true"/"false"
-    val advisoryMb = scala.util.Try(
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_MB", "64").trim.toInt)
-      .getOrElse(64).max(1)
-    val parallelismFirst =
-      (sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true")
-        .trim.toLowerCase != "false").toString
-    Seq(
-      "spark.sql.shuffle.partitions" -> cpus.toString,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
-      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> parallelismFirst,
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${advisoryMb}m",
-      "spark.sql.autoBroadcastJoinThreshold" -> (64 * 1024 * 1024).toString,
-      "spark.ui.enabled" -> "false")
-  }
+  /** Core count, a deployment setting: `SPARK_GRAFT_CPUS` if set, else the
+    * host's cores up to 32. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors.min(32))
 
-  def build(cpus: Int = Runtime.getRuntime.availableProcessors.min(32),
-      appName: String = "graft"): SparkSession = {
+  /** `getOrCreate`: in one JVM the first call fixes the session, so every
+    * caller must go through here to get the same shape. */
+  def build(cpus: Int = defaultCpus, appName: String = "graft"): SparkSession = {
     val b = SparkSession.builder().master(s"local[$cpus]").appName(appName)
-    (requiredConfs ++ tuningConfs(cpus)).foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  /** Shared TEST-SUITE session: every ScalaTest suite routes here so suite
-    * ordering can't change the session shape (`getOrCreate` means the
-    * first builder wins). Master gets a WIDE task-slot pool — the
-    * differential fuzz runs 8 concurrent scripts whose jobs are 1–8 tiny
-    * tasks each, and on the old shared `local[4]` they fought over 4 task
-    * slots on a 32-core box (the full suite's 44-minute wall, VERDICT r10
-    * item 1) — while shuffle fan-out stays small (8), sized to the tiny
-    * test fixtures rather than the core count. */
-  def buildForTests(appName: String): SparkSession = {
-    val slots = Runtime.getRuntime.availableProcessors.min(16)
-    val b = SparkSession.builder().master(s"local[$slots]").appName(appName)
-    (requiredConfs ++ tuningConfs(8)).foreach { case (k, v) => b.config(k, v) }
+    confs(cpus).foreach { case (k, v) => b.config(k, v) }
     val s = b.getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

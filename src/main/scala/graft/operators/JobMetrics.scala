@@ -1,13 +1,12 @@
 package graft.operators
 
 import scala.collection.mutable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
 
-/** B10: job metrics — per-stage record/byte counters via accumulators and a
-  * SparkListener, the same mechanism the reference's Spark data-writer uses
-  * (DataWriterAccumulators / StageMetricsRegistry shape).
+/** B10: job metrics — named record/byte counters via accumulators, the
+  * same mechanism the reference's Spark data-writer uses
+  * (DataWriterAccumulators shape).
   */
 class JobMetrics(spark: SparkSession) {
   private val accs = mutable.LinkedHashMap.empty[String, LongAccumulator]
@@ -17,16 +16,4 @@ class JobMetrics(spark: SparkSession) {
 
   def snapshot: Map[String, Long] =
     accs.iterator.map { case (k, v) => (k, v.value.longValue) }.toMap
-
-  /** Stage-level shuffle/in-out byte telemetry. */
-  val stageBytes = mutable.ArrayBuffer.empty[(Int, Long, Long, Long)]
-  spark.sparkContext.addSparkListener(new SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      stageBytes += ((sc.stageInfo.stageId,
-        m.inputMetrics.bytesRead,
-        m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten))
-    }
-  })
 }

@@ -9,13 +9,14 @@ import graft.core.{GraftSession, Tables}
   * which is the strategy the engine's md5-bucketed store layout targets for
   * repeated joins at 100 TB. */
 class BucketedJoinSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("bucketed-spec")
+  lazy val spark = GraftSession.build(appName = "bucketed-spec")
   val sf = "/root/testdata/sf0.001"
 
   test("bucketBy join plans without a shuffle exchange") {
     // (warehouse dir is static config — the default ./spark-warehouse is
     // fine; tables are dropped in the finally block)
     // disable broadcast so the join strategy decision is about shuffles
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       Tables.orders(spark, sf).write
@@ -38,8 +39,7 @@ class BucketedJoinSpec extends AnyFunSuite {
     } finally {
       spark.sql("DROP TABLE IF EXISTS orders_b")
       spark.sql("DROP TABLE IF EXISTS lineitem_b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        (64 * 1024 * 1024).toString)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     }
   }
 }

@@ -20,7 +20,7 @@ import graft.streaming.StreamDedup
   * suite's stores do, so its classes are not already cached by an earlier
   * suite in the same JVM. */
 class CodegenReuseSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("codegen-reuse-spec")
+  lazy val spark = GraftSession.build(appName = "codegen-reuse-spec")
   lazy val root = TmpStores.dir("graft-codegen").toString
   lazy val engine = new GraftEngine(spark, root)
 

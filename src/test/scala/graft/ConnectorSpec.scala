@@ -10,7 +10,7 @@ import graft.core.{GraftEngine, GraftSession, Tables}
 /** The DSv2 surface: vanilla `spark.read.format("graft")` / catalog SQL
   * over stores, full-parity with servingView, with bucket pruning. */
 class ConnectorSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("connector-spec")
+  lazy val spark = GraftSession.build(appName = "connector-spec")
   lazy val sf = "/root/testdata/sf0.001"
   lazy val root = graft.core.TmpStores.dir("graft-dsv2").toString
   lazy val engine = new GraftEngine(spark, root)

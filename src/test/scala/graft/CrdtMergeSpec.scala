@@ -13,7 +13,7 @@ import graft.operators.CrdtMerge
   * reference's scripted-ops expected-result style
   * (merge/helper/utils/ExpectedCollectionResults.java idea, not code). */
 class CrdtMergeSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("crdt-spec")
+  lazy val spark = GraftSession.build(appName = "crdt-spec")
 
   val valueSchema = StructType(Seq(
     StructField("name", StringType),

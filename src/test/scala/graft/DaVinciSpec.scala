@@ -12,7 +12,7 @@ import graft.core.{GraftEngine, GraftSession, Tables}
   * lookups off the Spark job path, partition (bucket) subscription as the
   * memory bound, coordinate-driven eventual-consistency refresh. */
 class DaVinciSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("davinci-spec")
+  lazy val spark = GraftSession.build(appName = "davinci-spec")
   lazy val sf = "/root/testdata/sf0.001"
   lazy val root = graft.core.TmpStores.dir("graft-davinci").toString
   lazy val engine = new GraftEngine(spark, root)

@@ -50,7 +50,7 @@ import graft.operators.{UpdateBuilder, WriteCompute}
   *    still overlay; repush after rollback re-mints the version number.
   */
 class EngineFuzzSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("engine-fuzz")
+  lazy val spark = GraftSession.build(appName = "engine-fuzz")
 
   private val Keys = Seq(1L, 2L, 3L, 4L, 5L)
   private val TsPool = Seq(10L, 20L, 30L, 40L) // reuse → tie coverage (LWW)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.core.{GraftEngine, GraftSession, Tables}
 
 class EngineSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("engine-spec")
+  lazy val spark = GraftSession.build(appName = "engine-spec")
   lazy val sf = "/root/testdata/sf0.001"
   lazy val root = graft.core.TmpStores.dir("graft-engine").toString
   lazy val engine = new GraftEngine(spark, root)

@@ -13,7 +13,7 @@ import graft.functions.{MinHashExpr, ShingleExpr, TextOps, TokenStatsExpr}
   * the DuckDB-oracle-checked semantics, so expression ≡ HOF ⇒ expression ≡
   * oracle. */
 class ExprProps extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("expr-props")
+  lazy val spark = GraftSession.build(appName = "expr-props")
 
   val wordGen: Gen[String] = Gen.oneOf(
     "the", "und", "la", "的", "alpha", "Beta", "GAMMA", "x", "yy",

@@ -9,7 +9,7 @@ import graft.core.{Guard, GuardRefusedException, GraftSession}
   * Bench/Verify map it to a `refused` status (not an error) — what makes a
   * sweep over guarded decades verifiable without parsing error prose. */
 class GuardSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("guard-spec")
+  lazy val spark = GraftSession.build(appName = "guard-spec")
 
   test("Guard.admit throws the typed refusal; classifier walks causes") {
     intercept[GuardRefusedException] { Guard.admit(false, "too big") }

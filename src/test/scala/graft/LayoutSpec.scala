@@ -11,7 +11,7 @@ import graft.operators.{Layout, Profile}
   * them for the secondary dimension — the file-level min/max pruning story
   * that decides scan cost at 100 TB. Plus Profile edge-case pins. */
 class LayoutSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("layout-spec")
+  lazy val spark = GraftSession.build(appName = "layout-spec")
   val sf = "/root/testdata/sf0.01"
 
   /** Files that CONTRIBUTE ROWS to a box-filter result — parquet row-group

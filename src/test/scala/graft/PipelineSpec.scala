@@ -6,7 +6,7 @@ import graft.core.{GraftSession, Tables}
 import graft.operators.{Dedup, Multimodal, Similarity}
 
 class PipelineSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("pipeline-spec")
+  lazy val spark = GraftSession.build(appName = "pipeline-spec")
   val sf = "/root/testdata/sf0.001"
 
   test("lang-id identifies hand-built sentences per language") {

@@ -11,7 +11,7 @@ import graft.core.{GraftEngine, GraftSession, Tables}
   * refactor can't silently regress the shape while keeping results right.
   */
 class PlanSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("plan-spec")
+  lazy val spark = GraftSession.build(appName = "plan-spec")
   val sf = "/root/testdata/sf0.001"
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =

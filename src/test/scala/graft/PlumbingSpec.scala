@@ -8,7 +8,7 @@ import graft.operators.{Integrity, JobMetrics, TokenBucket, WireFormat}
 import graft.sources.InputSource
 
 class PlumbingSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("plumbing-spec")
+  lazy val spark = GraftSession.build(appName = "plumbing-spec")
   val sf = "/root/testdata/sf0.001"
 
   test("B6 wire round-trip preserves rows") {

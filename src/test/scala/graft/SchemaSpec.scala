@@ -7,7 +7,7 @@ import graft.core.{GraftSession, SchemaEvolution, Tables}
 import graft.operators.Salting
 
 class SchemaSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("schema-spec")
+  lazy val spark = GraftSession.build(appName = "schema-spec")
   val sf = "/root/testdata/sf0.001"
 
   test("Venice partitioner parity: avro key bytes + MD5 Horner mod") {

@@ -14,7 +14,7 @@ case class Upd(c_custkey: Long, c_name: String, c_nationkey: Int,
 case class Doc(doc_id: Long, text: String, __event_ts_ms: Long)
 
 class StreamingSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("streaming-spec")
+  lazy val spark = GraftSession.build(appName = "streaming-spec")
   val sf = "/root/testdata/sf0.001"
   lazy val root = graft.core.TmpStores.dir("graft-stream").toString
   lazy val engine = new GraftEngine(spark, root)

@@ -14,7 +14,7 @@ import graft.operators.{UpdateBuilder, WriteCompute}
   * scripted-op-sequence expected-result framework with generated sequences:
   * squash(u1,u2) ≡ apply(u1);apply(u2) for arbitrary op pairs. */
 class WriteComputeProps extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("wc-props")
+  lazy val spark = GraftSession.build(appName = "wc-props")
 
   val valueSchema = StructType(Seq(
     StructField("score", LongType),

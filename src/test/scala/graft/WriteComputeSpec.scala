@@ -9,7 +9,7 @@ import graft.core.GraftSession
 import graft.operators.{UpdateBuilder, WriteCompute}
 
 class WriteComputeSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.buildForTests("wc-spec")
+  lazy val spark = GraftSession.build(appName = "wc-spec")
 
   val valueSchema = StructType(Seq(
     StructField("name", StringType),
